@@ -1,30 +1,79 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import com.fasterxml.jackson.databind.ObjectMapper
 
-/** Benchmark main (driver contract): runs every registered query on
-  * SPARK_GRAFT_SF_DIR, prints ONE JSON line.
+/** Registry timer: times every registered query on
+  * SPARK_GRAFT_SF_DIR. The judged benchmark, with seeded workloads and a
+  * per-layer split, is `perfbench/` (BENCHMARK.json).
   *
   * Protocol (BASELINE.md): per query one warm-up run then `SPARK_GRAFT_RUNS`
   * timed runs (default 3), reporting the median; plus a bulk-load metric
-  * (graph encode rows/s) as query class 1.
+  * (graph encode seconds). `SPARK_GRAFT_ONLY=q1,q2` times just those
+  * queries and rejects a name the registry does not hold.
   *
-  * Stall sentinel (BASELINE.md r15 adjudication): cpu_probe_ratio samples
-  * load once at startup and missed a mid-capture stall that smeared a
-  * contiguous registry stretch ~30%. Two in-capture instruments close
-  * that hole: a pinned cached micro-read timed after every query
-  * (probe_median/max/spikes — fixed plan, fixed data, so an outlier IS
-  * machine interference, localized in registry order), and a per-query
-  * ratchet against bench_bands.json (the last clean capture's medians,
-  * refreshed only deliberately) that re-runs any >2x-band query isolated
-  * at the end and reports captured vs isolated side by side.
+  * Output: the last stdout line is the short [[records]] summary, small
+  * enough that a 2,000-character tail of stdout parses. The per-query
+  * medians and failed names go to the detail file (SPARK_GRAFT_BENCH_OUT,
+  * default BENCH_LAST.json), replaced after every query so that a run
+  * killed mid-registry still leaves what it measured, marked "partial".
   */
 object Bench {
+  private val json = new ObjectMapper()
+
+  private def sec(v: Double): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(v).setScale(3, java.math.RoundingMode.HALF_UP)
+
+  /** The stdout summary line and the detail-file body for `results`, each
+    * query's median seconds or None when it failed. `count` is the number
+    * of queries run and `value` the total of the medians of those that
+    * succeeded. */
+  private[graft] def records(results: Seq[(String, Option[Double])],
+      sf: String, runs: Int, cpus: Int, bulkLoadSec: Double,
+      detailPath: String, partial: Boolean): (String, String) = {
+    val medians = results.collect { case (name, Some(s)) => name -> s }
+    val failed = results.collect { case (name, None) => name }
+    val summary = json.createObjectNode()
+      .put("metric", "total").put("value", sec(medians.map(_._2).sum))
+      .put("unit", "sec").put("count", results.size)
+      .put("failed", failed.size).put("sf", sf)
+      .put("runs_per_query", runs).put("cpus", cpus)
+      .put("bulk_load_sec", sec(bulkLoadSec)).put("detail", detailPath)
+    val detail = summary.deepCopy().put("partial", partial)
+    val qs = detail.putObject("queries")
+    medians.foreach { case (name, s) => qs.put(name, sec(s)) }
+    val fs = detail.putArray("failed_queries")
+    failed.foreach(fs.add)
+    (json.writeValueAsString(summary), json.writeValueAsString(detail) + "\n")
+  }
+
+  /** Readers see the previous complete file or the new one, never a
+    * truncated write. */
+  private def replaceFile(path: Path, body: String): Unit = {
+    val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
+    try {
+      Files.writeString(tmp, body)
+      Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
+    } catch { case e: java.io.IOException =>
+      System.err.println(s"[bench] cannot write $path: ${e.getMessage}")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val benchT0 = System.nanoTime() // SPARK_GRAFT_TIME_BUDGET anchor
+    val out = Paths.get(sys.env.getOrElse(
+      "SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json"))
+    val registry = queries.Registry.entries
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).toSet)
+    val unknown = only.toSeq.flatten.filterNot(n => registry.exists(_.name == n))
+    if (unknown.nonEmpty) {
+      System.err.println("[bench] SPARK_GRAFT_ONLY names unknown queries: " +
+        unknown.sorted.map("\"" + _ + "\"").mkString(", "))
+      sys.exit(2)
+    }
     val spark = GraftSession.local(cpus)
 
     def time(f: => Unit): Double = {
@@ -34,205 +83,37 @@ object Bench {
       val s = xs.sorted; s(s.length / 2)
     }
 
-    // Throttle probe: load-confounded runs become SELF-IDENTIFYING.
-    // Per-worker throughput of `cpus` parallel busy loops vs one solo
-    // loop — ~1.0 on an idle machine with >= cpus cores; substantially
-    // >1 under a CPU quota or external load (e.g. ~8 when 32 workers
-    // share 4 effective cores). ~2.5 s total cost.
-    def busyScore(ms: Long): Double = {
-      val end = System.nanoTime() + ms * 1000000L
-      var x = 1L; var n = 0L
-      while (System.nanoTime() < end) {
-        var i = 0
-        while (i < 10000) {
-          x = x * 6364136223846793005L + 1442695040888963407L; i += 1
-        }
-        n += 1
-      }
-      if (x == 42L) print("") // keep the loop observable
-      n.toDouble / ms
-    }
-    val cpuProbeRatio = {
-      busyScore(100) // JIT warm-up
-      val solo = busyScore(400)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(cpus)
-      val futs = (1 to cpus).map(_ => pool.submit(
-        new java.util.concurrent.Callable[Double] {
-          def call(): Double = busyScore(1500)
-        }))
-      val perWorker = futs.map(_.get()).sum / cpus
-      pool.shutdown()
-      solo / perWorker
-    }
-
-    // Stall sentinel, part 1: a pinned no-shuffle micro-read timed after
-    // every query. cpu_probe_ratio measures load ONCE at startup, so a
-    // stall that begins mid-capture (the r15 smear: a contiguous registry
-    // stretch inflated ~30% at a self-reported-clean 0.985 ratio) is
-    // invisible to it. The probe frame is cached up front (direct .cache(),
-    // NOT TransientCaches-registered, so releaseAll leaves it warm); its
-    // count has a fixed plan and fixed data, so any probe reading far off
-    // the run's own median is machine interference, localized in registry
-    // order right next to the queries it poisoned.
-    val probeDf = spark.range(0, 1 << 20, 1, cpus).toDF("i").cache()
-    probeDf.count() // materialize
-    val probeTimes = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-
-    // Stall sentinel, part 2: per-query bands from the last CLEAN capture
-    // (bench_bands.json, committed; refreshed deliberately — never by the
-    // bench itself, so a smeared run can't launder its own numbers into
-    // the ratchet). Queries that blow >2x their band get re-run ISOLATED
-    // at the end of the capture and BOTH numbers are reported: if the
-    // stall passed, the rerun lands back in band and the delta is the
-    // smear, attributed in the same artifact; if the machine is genuinely
-    // slow, the rerun confirms the captured reading.
-    val bands: Map[String, Double] = try {
-      val p = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BANDS", "bench_bands.json"))
-      if (java.nio.file.Files.exists(p)) {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val node = om.readTree(java.nio.file.Files.readString(p))
-        val it = node.fields()
-        val b = scala.collection.mutable.Map.empty[String, Double]
-        while (it.hasNext) { val e = it.next(); b(e.getKey) = e.getValue.asDouble() }
-        b.toMap
-      } else Map.empty
-    } catch { case _: Throwable => Map.empty }
-
     // Class 1: bulk load — relational tables → graph encoding, end to end.
     val loadSecs = time {
       val g = graft.core.GraphEncoder.encodeTpchUncached(spark, sfDir)
       g.atoms.count(); g.values.count()
     }
 
-    // dev aids (the driver never sets either, so the per-round protocol is
-    // unchanged): SPARK_GRAFT_ONLY=q1,q2 times just those queries;
-    // SPARK_GRAFT_NO_RELEASE=1 skips the between-query cache release — the
-    // r6 regime, kept as the A/B lever for attributing in-run deltas to
-    // cache hygiene vs plans vs machine load
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val noRelease = sys.env.contains("SPARK_GRAFT_NO_RELEASE")
-
-    // Graceful degradation (r19, after the r18 driver capture was killed at
-    // rc 124 leaving NO per-query evidence): the durable copy is flushed
-    // incrementally after every query, so a run killed mid-registry still
-    // leaves everything it measured, marked "partial": true. The timed
-    // action and per-query protocol are UNCHANGED — this only moves the
-    // file write from run-end to after-each-query.
-    val benchOutPath = java.nio.file.Paths.get(sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json"))
-    def flushPartial(rs: Seq[(String, Double)]): Unit = {
-      val qs = rs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-      val total = rs.map(_._2).filter(_ >= 0).sum
-      try java.nio.file.Files.writeString(benchOutPath,
-        s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"sf":"$sfDir","partial":true,"n_done":${rs.size}}""" + "\n")
-      catch { case _: Throwable => () }
+    val results = scala.collection.mutable.ArrayBuffer
+      .empty[(String, Option[Double])]
+    def flush(partial: Boolean): String = {
+      val (line, detail) = records(results.toSeq, sfDir, runs, cpus,
+        loadSecs, out.toString, partial)
+      replaceFile(out, detail)
+      line
     }
-    val done = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    val results: Seq[(String, Double)] =
-      queries.Registry.entries
-        .filter(q => only.forall(_.contains(q.name))).map { q =>
-        val r = try {
-          q.fn(spark, sfDir).count() // warm-up (also primes graph caches)
-          var ts = (1 to runs).map(_ => time(q.fn(spark, sfDir).count()))
-          // Stall-window guard: host-level CPU stalls smear across a
-          // contiguous stretch of the registry (BASELINE.md round-8 — a
-          // single ~60 s stall put er_infer_nested at 29 s when its clean
-          // time is ~4 s), and a stall spanning all `runs` samples poisons
-          // the median. When the sample spread says "one regime didn't
-          // produce these numbers" (median > 2.5 × min), take two more
-          // samples — if the stall has passed they pull the median back to
-          // the plan's real cost; if the machine is genuinely slow they
-          // confirm the reading. cpu_probe_ratio still reports overall load.
-          if (runs >= 3 && median(ts) > 2.5 * ts.min)
-            ts = ts ++ (1 to 2).map(_ => time(q.fn(spark, sfDir).count()))
-          probeTimes += q.name -> time(probeDf.count())
-          q.name -> median(ts)
-        } catch { case _: Throwable => q.name -> -1.0 }
-        finally {
-          // cache hygiene: drop THIS query's transient derived caches
-          // (shared encoder graphs stay warm) so late-registry queries
-          // measure their plans, not 90 predecessors' eviction churn
-          if (!noRelease) graft.core.TransientCaches.releaseAll()
-        }
-        done += r; flushPartial(done.toSeq)
-        r
+    registry.filter(q => only.forall(_.contains(q.name))).foreach { q =>
+      val secs = try {
+        q.fn(spark, sfDir).count() // warm-up (also primes graph caches)
+        Some(median((1 to runs).map(_ => time(q.fn(spark, sfDir).count()))))
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+        None
+      } finally {
+        // cache hygiene: drop THIS query's transient derived caches
+        // (shared encoder graphs stay warm) so late-registry queries
+        // measure their plans, not 90 predecessors' eviction churn
+        graft.core.TransientCaches.releaseAll()
       }
-
-    // End-of-capture isolated reruns for band blow-outs. Absolute floor
-    // 0.25 s keeps ms-scale noise from triggering reruns on tiny queries;
-    // >2x band is the same multiple the 2x-of-BASELINE gate uses. Caches
-    // are released between reruns exactly like the main loop, so the
-    // isolated number is measured under the main loop's regime.
-    //
-    // Rerun-pass bounds (r19, after a stall storm tripped 42-62 reruns and
-    // the r18 driver run timed out mid-registry): the pass is capped to the
-    // SPARK_GRAFT_RERUN_CAP biggest blow-outs by absolute captured seconds
-    // (default 12 — every storm-free capture on record had 0-2), and an
-    // optional SPARK_GRAFT_TIME_BUDGET (wall seconds since bench start)
-    // skips remaining RERUNS — never remaining queries — once exceeded.
-    // Skipped reruns are reported with isolated = -2.0 so the artifact
-    // says "not rerun" rather than silently omitting the blow-out.
-    val rerunCap = sys.env.getOrElse("SPARK_GRAFT_RERUN_CAP", "12").toInt
-    val timeBudget = sys.env.get("SPARK_GRAFT_TIME_BUDGET").map(_.toDouble)
-    def overBudget: Boolean = timeBudget.exists(b =>
-      (System.nanoTime() - benchT0) / 1e9 > b)
-    val blowOuts = results.collect {
-      // b > 0 guards a malformed bands file (a nested JSON value parses
-      // as 0.0, and a zero band would rerun every non-trivial query)
-      case (name, sec) if sec > 0.25 &&
-        bands.get(name).exists(b => b > 0 && sec > 2.0 * b) => (name, sec)
+      results += q.name -> secs
+      flush(partial = true)
     }
-    val rerunNames = blowOuts.sortBy(-_._2).take(rerunCap).map(_._1)
-    val skippedByCap = blowOuts.map(_._1).filterNot(rerunNames.contains)
-    val reruns: Seq[(String, Double, Double)] =
-      queries.Registry.entries.filter(q => rerunNames.contains(q.name)).map { q =>
-        val captured = results.find(_._1 == q.name).get._2
-        if (overBudget) (q.name, captured, -2.0)
-        else try {
-          q.fn(spark, sfDir).count()
-          val ts = (1 to runs).map(_ => time(q.fn(spark, sfDir).count()))
-          (q.name, captured, median(ts))
-        } catch { case _: Throwable => (q.name, captured, -1.0) }
-        finally if (!noRelease) graft.core.TransientCaches.releaseAll()
-      } ++ skippedByCap.map { n =>
-        (n, results.find(_._1 == n).get._2, -2.0)
-      }
-
-    // Probe stats: spikes are probes far off THIS run's own median (fixed
-    // plan + fixed cached data, so the only variable is the machine).
-    val pTimes = probeTimes.map(_._2).toSeq
-    val pMed = if (pTimes.nonEmpty) median(pTimes) else 0.0
-    val pMax = if (pTimes.nonEmpty) pTimes.max else 0.0
-    val spikes = probeTimes.filter { case (_, t) =>
-      t > math.max(3.0 * pMed, pMed + 0.05) }
-    val stallFlagged = spikes.nonEmpty || reruns.exists {
-      case (_, captured, isolated) => isolated > 0 && captured > 2.0 * isolated
-    }
-
-    // 3-decimal seconds: ms resolution is the noise floor anyway, and the
-    // shorter line keeps every query visible under tail-truncating captures
-    def fmt(v: Double): String = f"$v%.3f"
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val rr = reruns.map { case (k, c, i) =>
-      "\"" + k + "\":{\"captured\":" + fmt(c) + ",\"isolated\":" + fmt(i) + "}"
-    }.mkString("{", ",", "}")
-    val spikeNames = spikes.map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    val sentinel = s"""{"probe_median_ms":${fmt(pMed * 1000)},"probe_max_ms":${fmt(pMax * 1000)},"probe_spikes_after":$spikeNames,"reruns":$rr,"stall_flagged":$stallFlagged}"""
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","bulk_load_sec":${fmt(loadSecs)},"runs_per_query":$runs,"cpus":$cpus,"cpu_probe_ratio":${fmt(cpuProbeRatio)},"stall_sentinel":$sentinel}"""
-    println(line)
-    // Durable copy of the full per-query map: the driver's BENCH_r{N}.json
-    // keeps only a truncated stdout tail, which makes aggregate claims
-    // unverifiable from committed evidence — this file is the committed
-    // source of truth for the most recent bench run on this machine.
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")), line + "\n")
-    catch { case _: Throwable => () } // bench output on stdout regardless
+    println(flush(partial = false))
     spark.stop()
   }
 }

@@ -212,8 +212,8 @@ object GraphStore {
     * memory at the target scale (~100 TB / 1 GiB ⇒ O(100k); the 64 default
     * is a local-mode figure, not cluster guidance).
     */
-  /** The sizing rule the round-7 BucketBench probe validated in both
-    * directions (BASELINE.md): one bucket ≈ `targetBucketBytes` of table
+  /** The sizing rule validated in both directions (BASELINE.md,
+    * "Bucket-count probe"): one bucket ≈ `targetBucketBytes` of table
     * data. Too few buckets and a `values` bucket outgrows executor
     * memory; too many and the small-files tax inverts the win (probe:
     * 1000 buckets over 376 MiB wrote 8× slower than plain and made the
@@ -281,7 +281,8 @@ object GraphStore {
     * `-Dgraft.bucketed=1` for tests) routes the registry's store-backed
     * graph queries through the bucketed catalog layout, so the
     * zero-Exchange as-of read path runs under the full oracle gate and
-    * the bench — captured evidence, not just a BucketBench microprobe. */
+    * the bench (BASELINE.md, "Round 16: bucketed-store regime under
+    * the full registry"). */
   def bucketedRegime: Boolean =
     sys.env.get("SPARK_GRAFT_BUCKETED")
       .orElse(sys.props.get("graft.bucketed")).contains("1")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 /** Registry of TRANSIENT pinned tables: every persisted table a query
   * creates on the side (a derived graph's latest-values cache, a
   * NestedInfer result graph) registers here, and batch harnesses
-  * (Bench/Verify/BenchOne) call [[releaseAll]] between queries.
+  * (Bench/Verify) call [[releaseAll]] between queries.
   *
   * Why: Spark's CacheManager holds strong references, so a persisted
   * DataFrame outlives the Graph instance that created it. A 95-query

@@ -53,7 +53,7 @@ object StreamIngest {
       lastTxTs: Option[java.sql.Timestamp] = None)
 
   /** One ingest tick over a batch — the EXACT body the streaming query
-    * runs, package-visible so probes (tools.IngestProbe) measure the
+    * runs, package-visible so specs (StreamIngestSpec) drive the
     * production path instead of a copy. Returns the advanced state. */
   private[graft] def applyBatch(state: IngestState, batch: DataFrame,
       dir: String, et: String, key: Column, eventTs: Column, tie: Column,

@@ -969,7 +969,8 @@ object Wrangling {
     // exact endpoint of the recall/latency dial (every posting list
     // scanned ⇒ brute-force answer regardless of the centroids), which is
     // what the DuckDB oracle checks; PRUNED probes (nprobe<k) are
-    // spec-verified (recall) and measured in AnnBench.
+    // spec-verified (recall); their recall/latency dial is recorded in
+    // BASELINE.md ("ANN design experiment").
     QueryDef(
       "wr_ann_ivf",
       (s, d) => {
@@ -1006,7 +1007,8 @@ object Wrangling {
     // so the oracle is DuckDB's brute-force cosine over the FULL corpus
     // — any vector the ingest lost, duplicated, or misrouted breaks the
     // hash. Pruned nprobe < k (PartitionFilters across both trees) and
-    // replay idempotence are IncrementalAnnSpec's; recall is AnnBench's.
+    // replay idempotence are IncrementalAnnSpec's; the recall dial is in
+    // BASELINE.md ("ANN design experiment").
     QueryDef(
       "stream_ann_ingest",
       (s, d) => {

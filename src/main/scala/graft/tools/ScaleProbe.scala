@@ -199,8 +199,9 @@ object ScaleProbe {
           def run(dir: String): Double = {
             // release the PREVIOUS probe/dir's pinned caches first: 7
             // probes × 2 dirs of accumulated graphs otherwise churn
-            // executor storage (the growing-times signature CacheProbe
-            // documents), distorting the very exponents this tool reports
+            // executor storage (the eviction churn BASELINE.md's
+            // round-7 full local bench records), distorting the very
+            // exponents this tool reports
             graft.core.TransientCaches.releaseAll()
             // construction-eager queries (the span/dedup family) leak one
             // localCheckpoint RDD set per fn() call; those blocks are
