@@ -193,6 +193,18 @@ object GraphStore {
       metaInt("plainFieldAesThrough"))
   }
 
+  /** The sizing rule validated in both directions (BASELINE.md,
+    * "Bucket-count probe"): one bucket ≈ `targetBucketBytes` of table
+    * data. Too few buckets and a `values` bucket outgrows executor
+    * memory; too many and the small-files tax inverts the win (probe:
+    * 1000 buckets over 376 MiB wrote 8× slower than plain and made the
+    * co-located join SLOWER than the shuffling layout). sf0.1-scale data
+    * lands at the local default; 100 TB lands at O(100k). */
+  def bucketCountFor(totalBytes: Long,
+      targetBucketBytes: Long = 1L << 30): Int =
+    math.max(1, ((totalBytes + targetBucketBytes - 1) /
+      targetBucketBytes)).toInt
+
   /** Bucketed catalog tables — the 100-TB layout. `atoms` stays partitioned
     * by (kind, atype) for type pruning AND is bucketed+sorted by `atom_id`;
     * `values` is bucketed+sorted by `ae_id` (its only join/agg key). Both
@@ -208,33 +220,11 @@ object GraphStore {
     * pre-write `repartition` on the bucket key keeps file counts at
     * (buckets × partition dirs), not (× write tasks).
     *
-    * Sizing: pick `numBuckets` so one bucket of `values` fits an executor's
-    * memory at the target scale (~100 TB / 1 GiB ⇒ O(100k); the 64 default
-    * is a local-mode figure, not cluster guidance).
+    * Sizing: pick `numBuckets` with [[bucketCountFor]] so one bucket of
+    * `values` fits an executor's memory at the target scale (~100 TB /
+    * 1 GiB ⇒ O(100k); the 64 default is a local-mode figure, not cluster
+    * guidance). [[loadBucketed]] reads the tables back by the same prefix.
     */
-  /** The sizing rule validated in both directions (BASELINE.md,
-    * "Bucket-count probe"): one bucket ≈ `targetBucketBytes` of table
-    * data. Too few buckets and a `values` bucket outgrows executor
-    * memory; too many and the small-files tax inverts the win (probe:
-    * 1000 buckets over 376 MiB wrote 8× slower than plain and made the
-    * co-located join SLOWER than the shuffling layout). sf0.1-scale data
-    * lands at the local default; 100 TB lands at O(100k). */
-  def bucketCountFor(totalBytes: Long,
-      targetBucketBytes: Long = 1L << 30): Int =
-    math.max(1, ((totalBytes + targetBucketBytes - 1) /
-      targetBucketBytes)).toInt
-
-  /** [[bucketCountFor]] with a parallelism floor — what the regime's
-    * re-home call sites use instead of a hand-picked constant. The sizing
-    * rule alone gives 1 bucket for any store under a GiB, which would
-    * serialize every co-located scan locally; flooring at the session's
-    * default parallelism keeps small-store scans parallel while the
-    * byte rule takes over exactly when buckets risk outgrowing executor
-    * memory (100 TB ⇒ O(100k) buckets, dwarfing any core count). */
-  def autoBuckets(spark: SparkSession, totalBytes: Long): Int =
-    math.max(spark.sparkContext.defaultParallelism,
-      bucketCountFor(totalBytes))
-
   def saveBucketed(g: Graph, prefix: String, numBuckets: Int = 64,
       mode: SaveMode = SaveMode.Overwrite): Unit = {
     if (mode == SaveMode.Overwrite)
@@ -276,121 +266,6 @@ object GraphStore {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) fs.delete(p, true)
     }
-
-  /** Env-flagged bucketed READ regime: `SPARK_GRAFT_BUCKETED=1` (or
-    * `-Dgraft.bucketed=1` for tests) routes the registry's store-backed
-    * graph queries through the bucketed catalog layout, so the
-    * zero-Exchange as-of read path runs under the full oracle gate and
-    * the bench (BASELINE.md, "Round 16: bucketed-store regime under
-    * the full registry"). */
-  def bucketedRegime: Boolean =
-    sys.env.get("SPARK_GRAFT_BUCKETED")
-      .orElse(sys.props.get("graft.bucketed")).contains("1")
-
-  /** Pid-salted bucket prefixes keep concurrent JVMs from fighting over
-    * one managed location, but they also mean every run writes a FRESH
-    * `graftbkt_<pid>_*` table set into the shared warehouse and nothing
-    * ever reclaims a finished run's — warehouse disk and (metastore-backed)
-    * catalog entries would accumulate unboundedly across runs. Sweep
-    * managed locations whose embedded pid is provably dead, once per JVM,
-    * the first time this JVM enters the bucketed regime. Live pids —
-    * including this one — are never touched, so the concurrency guarantee
-    * the salt exists for is preserved. */
-  private lazy val sweptStaleBucketLocations: Unit =
-    sweepStaleBucketLocations(SparkSession.active)
-
-  private[graft] def sweepStaleBucketLocations(spark: SparkSession): Unit =
-    scala.util.Try { // a failed sweep must never poison bucketedView —
-      // reclamation is best-effort housekeeping, not a read dependency
-      val wh = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"))
-      val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // ProcessHandle only sees pids on THIS host: on a shared warehouse
-      // (hdfs/nfs via file:-mount) a pid live on another driver host would
-      // look dead here and its in-use tables would be deleted mid-query.
-      // Local-scheme-only is the conservative fence; shared deployments
-      // reclaim via their own retention tooling.
-      if (fs.getScheme == "file" && fs.exists(wh))
-        fs.listStatus(wh).foreach { st =>
-          st.getPath.getName match {
-            case PidName(pid) if scala.util.Try(
-                ProcessHandle.of(pid.toLong).isEmpty).getOrElse(false) =>
-              scala.util.Try { // per-entry: one bad entry must not end the sweep
-                // drop the catalog entry too (metastore-backed catalogs
-                // would otherwise keep a dangling table over deleted files)
-                if (spark.catalog.tableExists(st.getPath.getName))
-                  spark.sql(s"DROP TABLE IF EXISTS ${st.getPath.getName}")
-                fs.delete(st.getPath, true)
-              }; ()
-            case _ => ()
-          }
-        }
-    }.fold(_ => (), identity)
-
-  private val PidName = "graftbkt_(\\d+)_.*".r
-
-  /** Re-home `g` into the bucketed layout once per (prefix, token) and
-    * return the bucket-backed view. `token` fingerprints the SOURCE state
-    * (e.g. [[dirToken]] of a store directory): a matching token on the
-    * live tables skips the rewrite, so repeated opens of an unchanged
-    * store pay one write total. The prefix is caller-salted (pid/session)
-    * — the shared warehouse dir must not cross-talk between JVMs. */
-  def bucketedView(g: Graph, prefix: String, token: String,
-      numBuckets: => Int = 64): Graph = {
-    // numBuckets is BY-NAME: callers size it from store bytes
-    // (getContentSummary — an O(files) walk on local filesystems), which
-    // must only be paid on the rewrite path, not on every cache-hit open
-    val spark = g.spark
-    sweptStaleBucketLocations
-    // property named to dodge spark.redaction.regex: anything matching
-    // "token|secret|password" comes back from SHOW TBLPROPERTIES as
-    // "*********(redacted)" and the cache check would never hit
-    val live =
-      try spark.sql(s"SHOW TBLPROPERTIES ${prefix}_values ('graft.bucketState')")
-        .collect().headOption.map(_.getString(1).trim)
-        .filter(!_.contains("does not have property"))
-      catch { case _: Throwable => None }
-    // a token match is only valid while the table's storage is still there:
-    // a recycled pid + unchanged store could otherwise hit a stale catalog
-    // entry whose files the sweep already reclaimed, and loadBucketed would
-    // read a deleted location
-    val located = live.nonEmpty && {
-      try spark.sql(s"DESCRIBE FORMATTED ${prefix}_values")
-        .collect().find(_.getString(0) == "Location")
-        .map(_.getString(1)).forall(Fs.exists)
-      catch { case _: Throwable => false }
-    }
-    if (!live.contains(token) || !located) {
-      saveBucketed(g, prefix, numBuckets)
-      spark.sql(s"ALTER TABLE ${prefix}_values SET TBLPROPERTIES " +
-        s"('graft.bucketState'='$token')")
-    }
-    loadBucketed(spark, prefix)
-  }
-
-  /** Fingerprint of a store's current state from its TX LOG: the listing
-    * (names, lengths, mtimes) of `$path/txs` only — the monotonic
-    * high-water mark every committed mutation already maintains, since
-    * both append paths write their tx marker LAST and save()/compact()
-    * rewrite the txs tree. One small-directory listing (one entry per
-    * uncompacted tx), not the every-file walk this used to be: at the
-    * 100-TB north star a full-tree walk per open is minutes of driver
-    * time against an atoms tree of ~10^6 files, while the tx log stays
-    * O(appends since compaction). A purged-but-not-yet-recommitted
-    * partial slice (purgeSlice touches data trees, not txs) is the one
-    * mutation this misses — transient writer-recovery state that the
-    * recovery's own appendTx re-fingerprints moments later. */
-  def dirToken(path: String): String = {
-    if (!Fs.exists(path)) return "absent"
-    val sb = new StringBuilder
-    Fs.listStatus(s"$path/txs")
-      .sortBy(_.getPath.getName)
-      .foreach(st => sb.append(st.getPath.getName).append(':')
-        .append(st.getLen).append(':')
-        .append(st.getModificationTime).append('\n'))
-    java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sb.toString()).toLong & 0xffffffffL)
-  }
 
   def loadBucketed(spark: SparkSession, prefix: String): Graph = {
     val atomCols = Seq("atom_id", "kind", "atype", "src_id", "dst_id",

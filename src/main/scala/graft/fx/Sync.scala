@@ -113,28 +113,9 @@ object Sync {
   def open(spark: SparkSession, dir: String): SyncedGraph =
     SyncedGraph(GraphStore.loadWithClosures(spark, dir), dir)
 
-  /** Reader entry for QUERY paths: like [[open]], but under the bucketed
-    * regime ([[GraphStore.bucketedRegime]]) the reconciled graph is
-    * re-homed into the bucketed catalog layout (once per store state —
-    * [[GraphStore.dirToken]] keys the cache) so every downstream atom-id
-    * equi-join and latest-value aggregate reads pre-hashed tables.
-    * Writer and recovery paths keep [[open]]: re-homing inside an ingest
-    * tick would rewrite the bucketed tables once per delta. */
-  def openQuery(spark: SparkSession, dir: String): SyncedGraph = {
-    val sg = open(spark, dir)
-    if (!GraphStore.bucketedRegime) sg
-    else sg.copy(graph = GraphStore.bucketedView(sg.graph,
-      bucketPrefix(dir), GraphStore.dirToken(dir),
-      // bucket count from the codified sizing rule over the store's
-      // actual bytes (one getContentSummary call), not a constant
-      GraphStore.autoBuckets(spark, Fs.dirBytes(dir))))
-  }
-
-  /** Pid-salted so two JVMs sharing the warehouse dir (driver Verify +
-    * a dev shell) never fight over one table location. */
-  private def bucketPrefix(dir: String): String =
-    "graftbkt_" + ProcessHandle.current().pid() + "_" +
-      (scala.util.hashing.MurmurHash3.stringHash(dir) & 0x7fffffff)
+  /** Same as [[open]]; kept because the benchmark's as-of workload
+    * (`perfbench`) calls it by this name. */
+  def openQuery(spark: SparkSession, dir: String): SyncedGraph = open(spark, dir)
 
   // ---------------------------------------------------------------------
   // Live tail: the store directory as a micro-batch stream — the inputs

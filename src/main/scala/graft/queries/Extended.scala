@@ -40,34 +40,6 @@ object Extended {
   private val indexCache = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.sql.SparkSession, String),
       org.apache.spark.sql.DataFrame]
-  /** The TPC-H graph as the store-backed queries read it: the in-memory
-    * encoded graph normally; under [[graft.core.GraphStore.bucketedRegime]]
-    * a bucketed-catalog re-home of it (memoized per session+sf — the
-    * encoded graph is static, so the sf dir is the whole token), putting
-    * the indexed probe's as-of re-check on pre-hashed tables. */
-  private val bktGraphCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), graft.core.Graph]
-  private def tpchQueryGraph(s: org.apache.spark.sql.SparkSession,
-      d: String): graft.core.Graph = {
-    val g = GraphEncoder.encodeTpch(s, d)
-    if (!graft.core.GraphStore.bucketedRegime) g
-    else Registry.memoize(bktGraphCache, (s, d)) {
-      // prefix salted with the sf DIR, not just "_tpch": the memo is keyed
-      // per (session, dir) but a fixed table name would make a second sf
-      // dir in the same JVM (ScaleProbe args, multi-fixture tests) rewrite
-      // the first dir's tables under it — the first dir's cached Graph
-      // then silently reads the second dir's data (same rule as
-      // Sync.bucketPrefix)
-      graft.core.GraphStore.bucketedView(g,
-        "graftbkt_" + ProcessHandle.current().pid() + "_tpch_" +
-          (scala.util.hashing.MurmurHash3.stringHash(d) & 0x7fffffff),
-        token = d,
-        // size buckets from the SOURCE tables' bytes (the encode is
-        // roughly input-sized) via the codified rule, not a constant
-        numBuckets = graft.core.GraphStore.autoBuckets(s,
-          graft.core.Fs.dirBytes(d)))
-    }
-  }
 
   def tpchIndex(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
@@ -481,7 +453,7 @@ object Extended {
     QueryDef(
       "graph_select_by_field_indexed",
       (s, d) => {
-        val g = tpchQueryGraph(s, d)
+        val g = GraphEncoder.encodeTpch(s, d)
         g.now.selectByFieldIndexed(tpchIndex(s, d),
           "Customer", "c_mktsegment", "v_str", "BUILDING")
           .df.select(col("atom_id")).orderBy(col("atom_id"))
@@ -704,10 +676,7 @@ object Extended {
     QueryDef(
       "graph_sync_replica",
       (s, d) => {
-        // openQuery: under SPARK_GRAFT_BUCKETED=1 the follower reads the
-        // replica through bucketed catalog tables (plan-shape regime;
-        // results must be hash-identical either way)
-        val replica = graft.fx.Sync.openQuery(s, syncDirFor(s, d))
+        val replica = graft.fx.Sync.open(s, syncDirFor(s, d))
         val users = replica.now.all("User")
         val spend = users.fieldValue("Spend", "v_double", "spend")
         val bonus = users.fieldValue("Bonus", "v_long", "bonus")

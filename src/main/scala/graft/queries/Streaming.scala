@@ -301,11 +301,7 @@ object Streaming {
             StreamIngest.IngestField("EventType", "str", col("event_type"))),
           checkpointDir = s"$base/ckpt")
         q.awaitTermination()
-        // openQuery: the final read-back goes through the bucketed
-        // layout under SPARK_GRAFT_BUCKETED=1 (the ingest ticks above
-        // keep the plain append path — re-homing per delta would
-        // rewrite the bucketed tables every tick)
-        val g = Sync.openQuery(s, storeDir).graph
+        val g = Sync.open(s, storeDir).graph
         g.now.all("User").fieldValue("Value", "v_double", "value")
           .join(g.now.all("User")
             .fieldValue("EventType", "v_str", "event_type"), "atom_id")

@@ -66,8 +66,7 @@ object ScaleProbe {
         .fieldValue("name", "v_str", "cname")),
     // the engine's documented scale path for REPEATED reads of an
     // inferred graph: infer ONCE, save the graph, read through
-    // Sync.openQuery (bucketed catalog tables under
-    // SPARK_GRAFT_BUCKETED=1). The r17 100× attribution put ~half the
+    // Sync.open. The r17 100× attribution put ~half the
     // er probe's cost in re-reading the freshly-inferred IN-MEMORY graph
     // (no persisted layout) per run — this probe measures the read side
     // the way a production pipeline would actually serve it. The one-off
@@ -80,7 +79,7 @@ object ScaleProbe {
         graft.core.GraphStore.save(inferUnbounded(s, d), out)
         out
       })
-      graft.fx.Sync.openQuery(s, dir).now.all("Customer")
+      graft.fx.Sync.open(s, dir).now.all("Customer")
         .fieldValue("name", "v_str", "cname")
     }))
 

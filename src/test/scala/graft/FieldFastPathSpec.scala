@@ -125,9 +125,9 @@ class FieldFastPathSpec extends AnyFunSuite {
 
   test("bucketed re-home preserves the bound (clamped) and stays equivalent") {
     val g = GraphEncoder.encodeTpch(spark, sf)
-    val prefix = "graftbkt_" + ProcessHandle.current().pid() + "_fastpath"
-    val bkt = GraphStore.bucketedView(g, prefix, token = "fastpath-spec",
-      numBuckets = 4)
+    val prefix = "bfastpath"
+    GraphStore.saveBucketed(g, prefix, numBuckets = 4)
+    val bkt = GraphStore.loadBucketed(spark, prefix)
     assert(bkt.plainFieldAesThrough == g.maxSlice,
       "bucketed TBLPROPERTIES round-trip must restore the clamped bound")
     val fast = bkt.now.all("Customer").fields(

@@ -232,49 +232,6 @@ class GraphStoreSpec extends AnyFunSuite {
     assert(GraphStore.bucketCountFor(10L * GiB, targetBucketBytes = GiB / 4) == 40)
   }
 
-  test("autoBuckets: parallelism floor locally, byte rule at scale") {
-    val GiB = 1L << 30
-    val par = spark.sparkContext.defaultParallelism
-    // a small local store must not serialize its scans into one bucket
-    assert(GraphStore.autoBuckets(spark, 0) == par)
-    assert(GraphStore.autoBuckets(spark, GiB) == par)
-    // at the 100-TB north star the sizing rule dominates any core count
-    assert(GraphStore.autoBuckets(spark, 100L * 1024 * GiB) == 100 * 1024)
-  }
-
-  test("stale-pid bucket locations are swept; live-pid ones are kept") {
-    val wh = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    wh.mkdirs()
-    // a pid far above Linux's default pid_max cannot be alive; our own is
-    val dead = new java.io.File(wh, "graftbkt_999999999_tpch_1")
-    val live = new java.io.File(wh,
-      s"graftbkt_${ProcessHandle.current().pid()}_tpch_1")
-    val other = new java.io.File(wh, "unrelated_table") // never touched
-    Seq(dead, live, other).foreach(_.mkdirs())
-    GraphStore.sweepStaleBucketLocations(spark)
-    assert(!dead.exists(), "dead-pid bucket location must be reclaimed")
-    assert(live.exists(), "live-pid bucket location must survive the sweep")
-    assert(other.exists(), "non-graftbkt warehouse entries are not ours")
-    Seq(live, other).foreach(f => { f.delete(); () })
-  }
-
-  test("sweep drops the stale pid's CATALOG entry along with its files") {
-    // with a persistent metastore, deleting only the files leaves a
-    // dangling table — and worse, a recycled pid could cache-hit the
-    // stale entry and read the reclaimed location
-    val name = "graftbkt_999999999_values"
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    spark.range(3).toDF("x").write.format("parquet").saveAsTable(name)
-    assert(spark.catalog.tableExists(name))
-    GraphStore.sweepStaleBucketLocations(spark)
-    assert(!spark.catalog.tableExists(name),
-      "sweep must drop the catalog entry, not just the files")
-    val wh = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    assert(!new java.io.File(wh, name).exists())
-  }
-
   test("bucketed store: semantics parity + co-located plans with no Exchange") {
     val (g1, _) = Transactor.transact(Graph.empty(spark), Seq(
       PutEntity("Person", "joe"), PutField("joe", "Name", "Joe"),
@@ -617,105 +574,5 @@ class GraphStoreSpec extends AnyFunSuite {
     assert(Files.exists(target.resolve("precious.txt")),
       "rm followed the symlink and destroyed the target")
     Fs.rm(target.toFile)
-  }
-
-  test("dirToken: tracks the tx high-water mark, ignores data-tree churn") {
-    import graft.fx.Sync
-    val dir = java.nio.file.Files.createTempDirectory("graft_tok").toString
-    val (g, _) = Transactor.transact(Graph.empty(spark), Seq(
-      PutEntity("Person", "a"), PutField("a", "Name", "Ann")))
-    val writer = Sync.publish(g, dir)
-    val t0 = GraphStore.dirToken(dir)
-    assert(t0 != "absent" && GraphStore.dirToken(dir) == t0,
-      "token must be stable across reads of an unchanged store")
-    // every committed mutation writes its tx marker last → token moves
-    val (w2, _) = writer.transact(Seq(AssignField("e:Person/a", "Name", "An")))
-    val t1 = GraphStore.dirToken(dir)
-    assert(t1 != t0, "an appended transaction must re-fingerprint")
-    // compact rewrites the txs tree → token moves (conservative refresh)
-    GraphStore.compact(spark, dir)
-    assert(GraphStore.dirToken(dir) != t1)
-    // the deliberate r17 contract CHANGE: the token reads ONLY the tx
-    // log — touching a data-tree file no longer re-fingerprints (the
-    // old every-file walk did, and cost O(files) per open; at 100 TB
-    // that walk was minutes of driver time). Data trees only change
-    // under a committed tx or a maintenance op, both of which move txs.
-    val tAfter = GraphStore.dirToken(dir)
-    def firstFile(f: java.io.File): Option[java.io.File] =
-      if (f.isFile) Some(f)
-      else Option(f.listFiles()).getOrElse(Array.empty)
-        .iterator.flatMap(firstFile).nextOption()
-    val touched = firstFile(new java.io.File(s"$dir/atoms")).get
-    assert(touched.setLastModified(touched.lastModified() + 60000))
-    assert(GraphStore.dirToken(dir) == tAfter,
-      "data-tree mtime churn must not re-fingerprint")
-    assert(w2.graph.maxSlice == 2) // writer handle still coherent
-  }
-
-  test("bucketed regime: two sf dirs in one JVM keep separate table sets") {
-    // the r16 advisor's cross-talk scenario: the TPC-H bucketed re-home
-    // used ONE fixed table prefix for all sf dirs while memoizing per
-    // (session, dir) — opening a second dir rewrote the shared tables
-    // under the first dir's cached Graph, which then silently read the
-    // second dir's data. The prefix is now dir-salted; the first dir's
-    // results must survive a second dir's open unchanged.
-    sys.props("graft.bucketed") = "1"
-    try {
-      val q = graft.queries.Registry.queries("graph_select_by_field_indexed")
-      def rows(d: String): Seq[String] =
-        q(spark, d).collect().map(_.getString(0)).toSeq
-      val r1a = rows("/root/testdata/sf0.001")
-      val r2 = rows("/root/testdata/sf0.01")
-      assert(r1a.nonEmpty && r2.nonEmpty && r1a != r2,
-        "fixture dirs must differ for the isolation check to bite")
-      assert(rows("/root/testdata/sf0.001") == r1a,
-        "first dir's cached bucketed graph served the second dir's data")
-    } finally {
-      sys.props.remove("graft.bucketed")
-      graft.core.TransientCaches.releaseAll()
-    }
-  }
-
-  test("bucketed regime: openQuery re-homes once per store state, results identical") {
-    import graft.fx.Sync
-    val dir = java.nio.file.Files.createTempDirectory("graft_bktreg").toString
-    val (g, _) = Transactor.transact(Graph.empty(spark), Seq(
-      PutEntity("Person", "a"), PutField("a", "Name", "Ann"),
-      PutEntity("Person", "b"), PutField("b", "Name", "Bob")))
-    val writer = Sync.publish(g, dir)
-    def names(sg: graft.fx.SyncedGraph): Set[String] =
-      sg.now.all("Person").fieldValue("Name", "v_str", "n")
-        .collect().map(_.getAs[String]("n")).toSet
-    // regime OFF: openQuery is exactly open (no catalog tables involved)
-    val plain = Sync.openQuery(spark, dir)
-    assert(names(plain) == Set("Ann", "Bob"))
-    sys.props("graft.bucketed") = "1"
-    try {
-      // regime ON: same results through bucketed catalog tables, and the
-      // hot as-of aggregate over them carries no Exchange
-      val b1 = Sync.openQuery(spark, dir)
-      assert(names(b1) == Set("Ann", "Bob"))
-      val agg = b1.graph.values.groupBy("ae_id")
-        .agg(max_by(struct(col("tx_slice"), col("v_str")), col("tx_slice")))
-      agg.collect()
-      assert(!agg.queryExecution.executedPlan.toString.contains("Exchange"))
-      // token cache: a second open of the UNCHANGED store must not
-      // rewrite the tables (warehouse file mtimes stay put)
-      val loc = spark.catalog.listTables().collect()
-        .map(_.name).filter(n => n.startsWith("graftbkt_") &&
-          n.endsWith("_values"))
-        .map(n => new java.io.File(new java.net.URI(
-          spark.sql(s"DESCRIBE EXTENDED $n").collect()
-            .find(_.getString(0) == "Location").get.getString(1))))
-        .find(_.exists())
-        .getOrElse(fail("no live graftbkt_*_values table location found"))
-      def mtimes() = loc.listFiles().map(f => f.getName -> f.lastModified()).toMap
-      val before = mtimes()
-      assert(names(Sync.openQuery(spark, dir)) == Set("Ann", "Bob"))
-      assert(mtimes() == before, "unchanged store was re-homed again")
-      // a new delta re-fingerprints: the next openQuery sees it
-      writer.transact(Seq(AssignField("e:Person/a", "Name", "Anne")))
-      assert(names(Sync.openQuery(spark, dir)) == Set("Anne", "Bob"))
-    } finally sys.props.remove("graft.bucketed")
   }
 }
