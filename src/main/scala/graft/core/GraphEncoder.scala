@@ -13,8 +13,13 @@ import graft.Tables
   * Every row of a source table becomes: 1 entity atom + per field
   * (1 relation atom + 1 AE atom + 1 value row) — the 6th-normal-form
   * property graph of SURVEY §1.1. FK columns become entity-entity relation
-  * atoms. At 100 TB this is a map-only job per table (narrow, no shuffle);
-  * the write would be partitioned by (kind, atype) and bucketed by atom_id.
+  * atoms. The rows are built by [[Schema]]'s row builders, one projection
+  * per source table and output table: a source row's atoms (entity, field
+  * AEs and relations, its FK relation) are cells of one exploded array,
+  * and its value rows likewise, so each table is scanned once per output
+  * table whatever its field count. At 100 TB this is a map-only job per
+  * table (narrow, no shuffle); the write would be partitioned by
+  * (kind, atype) and bucketed by atom_id.
   */
 object GraphEncoder {
 
@@ -53,15 +58,18 @@ object GraphEncoder {
     // shared graph re-analyzes that tree — measured at ~5.2 s of
     // analysis_ms across the 125-query registry (PLANSHAPES;
     // graph_bulk_rescore paid 552 ms of its 1.6 s median per run). The
-    // eager localCheckpoint truncates the lineage to a stats-carrying
-    // LogicalRDD leaf (Spark copies the origin plan's statistics and
-    // constraints into the leaf, so join-strategy selection is unchanged),
-    // collapsing per-construction Catalyst analysis registry-wide. The
-    // trade: the scan is row-based (no columnar batch / column pruning)
-    // and the frames are not fault-tolerant to executor loss — both fine
-    // for a single-JVM session cache; a cluster deployment would persist
-    // the encode as partitioned+bucketed TABLES (GraphStore.saveBucketed),
-    // which this cache stands in for.
+    // eager localCheckpoint truncates the lineage to a LogicalRDD leaf
+    // that carries the origin plan's statistics estimate, collapsing
+    // per-construction Catalyst analysis registry-wide. The trades:
+    // - the leaf is stored twice, as DISK_ONLY checkpoint blocks plus the
+    //   MEMORY_AND_DISK in-memory relation persisted over them;
+    // - built with AQE on (bench, production), the leaf has no output
+    //   partitioning, so its consumers plan exchanges that a leaf built
+    //   with AQE off does not need (ROADMAP open item 1);
+    // - the frames are not fault-tolerant to executor loss — fine for a
+    //   single-JVM session cache; a cluster deployment would persist the
+    //   encode as partitioned+bucketed TABLES (GraphStore.saveBucketed),
+    //   which this cache stands in for.
     def leaf(df: DataFrame): DataFrame =
       df.localCheckpoint(true,
           org.apache.spark.storage.StorageLevel.DISK_ONLY)
@@ -72,13 +80,6 @@ object GraphEncoder {
     TransientCaches.markShared(c)
     c
   }
-
-  private def nullV = Seq(
-    lit(null).cast("string").as("v_str"),
-    lit(null).cast("long").as("v_long"),
-    lit(null).cast("double").as("v_double"),
-    lit(null).cast("boolean").as("v_bool"),
-    lit(null).cast("timestamp").as("v_ts"))
 
   def entityId(et: String, key: Column): Column =
     concat(lit(s"e:$et/"), key.cast("string"))
@@ -96,70 +97,47 @@ object GraphEncoder {
           "a non-null key (filter or surrogate first)")))
         .otherwise(key.cast("string")))
 
-  /** Entities + their field AEs/relations/values, all at inst_slice.
+  /** Entities + their field AEs/relations/values, all at inst_slice, in
+    * one projection per output table: each source row yields its entity
+    * atom plus the AE and field-relation atoms of every present field,
+    * and one value row per present field ([[Schema.rows]]).
     * A NULL field value encodes as NO field — no AE, no field relation,
     * no value row (the write path's "omit the field instead" contract,
     * [[graft.gql.GqlLite.compileMutation]]); a null-valued row otherwise
     * landed a vtype'd all-null value row plus a born-empty AE that no
     * transact could ever produce. */
   def encodeEntities(df: DataFrame, et: String, keyCol: String,
-      fieldCols: Seq[String], instSlice: Int = 1): (DataFrame, DataFrame) = {
+      fieldCols: Seq[String], instSlice: Int = 1): (DataFrame, DataFrame) =
+    (Schema.rows(df, entityAtoms(et, keyCol, fieldCols, instSlice)),
+      fieldValues(df, et, keyCol, fieldCols, instSlice))
+
+  private def present(f: String)(cell: Column): Column =
+    when(col(f).isNotNull, cell)
+
+  /** One source row's entity atom cell plus its present fields' AE and
+    * field-relation cells. */
+  private def entityAtoms(et: String, keyCol: String, fieldCols: Seq[String],
+      instSlice: Int): Seq[Column] = {
     val id = entityIdStrict(et, col(keyCol))
-    val entity = df.select(
-      id.as("atom_id"), lit(Kind.Entity).as("kind"), lit(et).as("atype"),
-      lit(null).cast("string").as("src_id"), lit(null).cast("string").as("dst_id"),
-      lit(instSlice).as("inst_slice"), lit(null).cast("int").as("term_slice"),
-      id.as("origin_uid"))
+    Schema.atom(id, Kind.Entity, lit(et), Schema.noEnd, Schema.noEnd,
+      lit(instSlice)) +: fieldCols.flatMap(f =>
+      Schema.fieldAtoms(f, id, lit(instSlice)).map(present(f)))
+  }
 
-    val perField = fieldCols.map { f =>
-      val present = df.filter(col(f).isNotNull)
-      val aeId = concat(lit(s"ae:$f/"), id)
-      val relId = concat(lit(s"rel:$f/"), id)
-      val ae = present.select(
-        aeId.as("atom_id"), lit(Kind.AttributeEntity).as("kind"),
-        lit(f).as("atype"),
-        lit(null).cast("string").as("src_id"), lit(null).cast("string").as("dst_id"),
-        lit(instSlice).as("inst_slice"), lit(null).cast("int").as("term_slice"),
-        aeId.as("origin_uid"))
-      val rel = present.select(
-        relId.as("atom_id"), lit(Kind.Relation).as("kind"), lit(f).as("atype"),
-        id.as("src_id"), aeId.as("dst_id"),
-        lit(instSlice).as("inst_slice"), lit(null).cast("int").as("term_slice"),
-        relId.as("origin_uid"))
-      (ae, rel)
-    }
-    val atoms = (entity +: perField.flatMap(p => Seq(p._1, p._2)))
-      .reduce(_ unionByName _)
-
-    val values = fieldCols.map { f =>
-      val aeId = concat(lit(s"ae:$f/"), id)
-      val dt = df.schema(f).dataType.typeName
-      val (vtype, typed): (String, Seq[Column]) = dt match {
-        case "string" => ("str", Seq(col(f).as("v_str")) ++ nullV.tail)
-        case "long" | "integer" | "short" =>
-          ("long", Seq(nullV.head, col(f).cast("long").as("v_long")) ++ nullV.drop(2))
-        case "double" | "float" =>
-          ("double", nullV.take(2) ++ Seq(col(f).cast("double").as("v_double")) ++ nullV.drop(3))
-        case "boolean" =>
-          ("bool", nullV.take(3) ++ Seq(col(f).as("v_bool"), nullV.last))
-        case "timestamp" | "timestamp_ntz" =>
-          ("ts", nullV.take(4) :+ col(f).cast("timestamp").as("v_ts"))
-        case other => throw new IllegalArgumentException(s"field $f: $other")
-      }
-      df.filter(col(f).isNotNull)
-        .select(Seq(aeId.as("ae_id"), lit(instSlice).as("tx_slice"),
-          lit(vtype).as("vtype")) ++ typed: _*)
-    }.reduceOption(_ unionByName _).getOrElse {
+  private def fieldValues(df: DataFrame, et: String, keyCol: String,
+      fieldCols: Seq[String], instSlice: Int): DataFrame =
+    if (fieldCols.isEmpty)
       // empty VALUES must still carry the ValueRow schema: a zero-column
       // emptyDataFrame constructs a Graph fine but throws on the first
       // read (latestValues filters tx_slice) or unionByName downstream
-      import org.apache.spark.sql.Encoders
-      df.sparkSession.createDataFrame(
-        df.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        Encoders.product[ValueRow].schema)
+      df.sparkSession.emptyDataset(
+        org.apache.spark.sql.Encoders.product[ValueRow]).toDF()
+    else {
+      val id = entityIdStrict(et, col(keyCol))
+      Schema.rows(df, fieldCols.map(f => present(f)(Schema.value(
+        Schema.aeId(f, id), lit(instSlice), Schema.vtypeOf(df.schema(f)),
+        col(f)))))
     }
-    (atoms, values)
-  }
 
   /** FK column → entity-entity relation atoms. A NULL FK on either side
     * encodes as NO relation (standard optional-FK semantics) — unfiltered,
@@ -174,16 +152,17 @@ object GraphEncoder {
     * a shuffle for the dirty exception). */
   def encodeRelations(df: DataFrame, rt: String,
       srcEt: String, srcKeyCol: String, dstEt: String, dstKeyCol: String,
-      instSlice: Int = 1): DataFrame = {
+      instSlice: Int = 1): DataFrame =
+    Schema.rows(df,
+      Seq(relationAtom(rt, srcEt, srcKeyCol, dstEt, dstKeyCol, instSlice)))
+
+  private def relationAtom(rt: String, srcEt: String, srcKeyCol: String,
+      dstEt: String, dstKeyCol: String, instSlice: Int): Column = {
     val src = entityId(srcEt, col(srcKeyCol))
     val dst = entityId(dstEt, col(dstKeyCol))
-    val relId = concat(lit(s"r:$rt/"), src, lit(">"), dst)
-    df.filter(col(srcKeyCol).isNotNull && col(dstKeyCol).isNotNull)
-      .select(
-      relId.as("atom_id"), lit(Kind.Relation).as("kind"), lit(rt).as("atype"),
-      src.as("src_id"), dst.as("dst_id"),
-      lit(instSlice).as("inst_slice"), lit(null).cast("int").as("term_slice"),
-      relId.as("origin_uid"))
+    when(col(srcKeyCol).isNotNull && col(dstKeyCol).isNotNull,
+      Schema.atom(concat(lit(s"r:$rt/"), src, lit(">"), dst), Kind.Relation,
+        lit(rt), src, dst, lit(instSlice)))
   }
 
   /** TPC-H-ish testdata → temporal property graph.
@@ -201,18 +180,22 @@ object GraphEncoder {
     val ord = Tables.orders(spark, sfDir)
     val nat = Tables.nation(spark, sfDir)
 
-    val (a1, v1) = encodeEntities(nat, "Nation", "n_nationkey", Seq("n_name"))
-    val (a2, v2) = encodeEntities(cust, "Customer", "c_custkey",
-      Seq("c_name", "c_acctbal", "c_mktsegment"))
-    val (a3, v3) = encodeEntities(ord, "Order", "o_orderkey",
-      Seq("o_totalprice", "o_orderstatus", "o_orderdate"))
-    val r1 = encodeRelations(cust, "MemberOf", "Customer", "c_custkey",
-      "Nation", "c_nationkey")
-    val r2 = encodeRelations(ord, "Placed", "Customer", "o_custkey",
-      "Order", "o_orderkey")
-
-    val atoms = Seq(a1, a2, a3, r1, r2).reduce(_ unionByName _)
-    val values = Seq(v1, v2, v3).reduce(_ unionByName _)
+    // one projection per source table: its entities with their fields,
+    // plus the table's FK relation
+    val sources = Seq(
+      (nat, "Nation", "n_nationkey", Seq("n_name"), None),
+      (cust, "Customer", "c_custkey", Seq("c_name", "c_acctbal", "c_mktsegment"),
+        Some(relationAtom("MemberOf", "Customer", "c_custkey",
+          "Nation", "c_nationkey", 1))),
+      (ord, "Order", "o_orderkey", Seq("o_totalprice", "o_orderstatus", "o_orderdate"),
+        Some(relationAtom("Placed", "Customer", "o_custkey",
+          "Order", "o_orderkey", 1))))
+    val atoms = sources.map { case (df, et, key, fields, rel) =>
+      Schema.rows(df, entityAtoms(et, key, fields, 1) ++ rel)
+    }.reduce(_ unionByName _)
+    val values = sources.map { case (df, et, key, fields, _) =>
+      fieldValues(df, et, key, fields, 1)
+    }.reduce(_ unionByName _)
     import spark.implicits._
     val txs = Seq(TxRow(1, java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
       .toDF()
@@ -251,55 +234,24 @@ object GraphEncoder {
       .drop("__rank")
 
     val userId = entityIdStrict("User", col("user_id"))
-    // User entities appear at the slice of their first event.
-    val users = ranked.groupBy(col("user_id"))
-      .agg(min(col("tx_slice")).as("first_slice"))
-      .select(
-        entityIdStrict("User", col("user_id")).as("atom_id"),
-        lit(Kind.Entity).as("kind"), lit("User").as("atype"),
-        lit(null).cast("string").as("src_id"), lit(null).cast("string").as("dst_id"),
-        col("first_slice").cast("int").as("inst_slice"),
-        lit(null).cast("int").as("term_slice"),
-        entityId("User", col("user_id")).as("origin_uid"))
-
-    def aePair(field: String): DataFrame = {
-      val base = users.select(col("atom_id").as("owner"), col("inst_slice"))
-      val ae = base.select(
-        concat(lit(s"ae:$field/"), col("owner")).as("atom_id"),
-        lit(Kind.AttributeEntity).as("kind"), lit(field).as("atype"),
-        lit(null).cast("string").as("src_id"), lit(null).cast("string").as("dst_id"),
-        col("inst_slice"), lit(null).cast("int").as("term_slice"),
-        concat(lit(s"ae:$field/"), col("owner")).as("origin_uid"))
-      val rel = base.select(
-        concat(lit(s"rel:$field/"), col("owner")).as("atom_id"),
-        lit(Kind.Relation).as("kind"), lit(field).as("atype"),
-        col("owner").as("src_id"),
-        concat(lit(s"ae:$field/"), col("owner")).as("dst_id"),
-        col("inst_slice"), lit(null).cast("int").as("term_slice"),
-        concat(lit(s"rel:$field/"), col("owner")).as("origin_uid"))
-      ae.unionByName(rel)
-    }
-
-    val atoms = users.unionByName(aePair("Value")).unionByName(aePair("EventType"))
-
-    val valAssignments = ranked.select(
-      concat(lit("ae:Value/"), userId).as("ae_id"),
-      col("tx_slice"), lit("double").as("vtype"),
-      lit(null).cast("string").as("v_str"), lit(null).cast("long").as("v_long"),
-      col("value").as("v_double"), lit(null).cast("boolean").as("v_bool"),
-      lit(null).cast("timestamp").as("v_ts"))
-    val typeAssignments = ranked.select(
-      concat(lit("ae:EventType/"), userId).as("ae_id"),
-      col("tx_slice"), lit("str").as("vtype"),
-      col("event_type").as("v_str"), lit(null).cast("long").as("v_long"),
-      lit(null).cast("double").as("v_double"), lit(null).cast("boolean").as("v_bool"),
-      lit(null).cast("timestamp").as("v_ts"))
+    val fields = Seq(("Value", "double", col("value")),
+      ("EventType", "str", col("event_type")))
+    // User entities appear at the slice of their first event, with their
+    // field AEs/relations; each event assigns both fields at its slice.
+    val firstSlice = col("first_slice")
+    val atoms = Schema.rows(
+      ranked.groupBy(col("user_id")).agg(min(col("tx_slice")).as("first_slice")),
+      Schema.atom(userId, Kind.Entity, lit("User"), Schema.noEnd,
+        Schema.noEnd, firstSlice) +:
+        fields.flatMap(f => Schema.fieldAtoms(f._1, userId, firstSlice)))
+    val values = Schema.rows(ranked, fields.map { case (f, vtype, v) =>
+      Schema.value(Schema.aeId(f, userId), col("tx_slice"), vtype, v) })
 
     val txs = ranked.select(col("tx_slice").as("tx_id"), col("ts"))
     // multi-assignment history (no uniqueValuesThrough), but the AEs are
     // all plain ae:Value/ae:EventType forms born alive — scheme-id field
     // resolution holds at every slice until a mutation clamps it
-    Graph(atoms, valAssignments.unionByName(typeAssignments), txs)
+    Graph(atoms, values, txs)
       .copy(plainFieldAesThrough = Int.MaxValue)
   }
 }

@@ -1,6 +1,9 @@
 package graft.core
 
 import java.sql.Timestamp
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructField
 
 /** Columnar schema of the temporal property graph (SURVEY.md §1.2).
   *
@@ -68,6 +71,78 @@ object Schema {
     * projection ops like `field`. */
   val atomCols: Set[String] = Set("atom_id", "kind", "atype", "src_id",
     "dst_id", "inst_slice", "term_slice", "origin_uid")
+
+  // Row builders: the ONE place the atom/value row format is written.
+  // Each returns a struct cell; a bulk producer puts all the cells one
+  // source row yields into one [[rows]] projection.
+
+  /** The missing endpoint of an entity or AE atom. */
+  val noEnd: Column = lit(null).cast("string")
+
+  /** One [[AtomRow]] cell, born alive at the int slice `inst`:
+    * term_slice null, origin_uid = `id`. */
+  def atom(id: Column, kind: String, atype: Column, src: Column,
+      dst: Column, inst: Column): Column =
+    struct(id.as("atom_id"), lit(kind).as("kind"), atype.as("atype"),
+      src.as("src_id"), dst.as("dst_id"), inst.as("inst_slice"),
+      lit(null).cast("int").as("term_slice"), id.as("origin_uid"))
+
+  /** Scheme id of the AE of field `key` on `ownerId`: `ae:<key>/<owner>`. */
+  def aeId(key: Column, ownerId: Column): Column =
+    concat(lit("ae:"), key, lit("/"), ownerId)
+  def aeId(rt: String, ownerId: Column): Column = aeId(lit(rt), ownerId)
+
+  /** The id prefixes of field `rt`'s AE and field-relation atoms. */
+  def fieldPrefixes(rt: String): Seq[String] = Seq(s"ae:$rt/", s"rel:$rt/")
+
+  /** The AE cell and the field-relation cell (owner → AE) of field `rt`
+    * on `ownerId`, ids `ae:<key>/<owner>` and `rel:<key>/<owner>`. `key`
+    * is `rt` unless the field is one element of a multi-valued field
+    * (NestedInfer's `rt[pos]`). */
+  def fieldAtoms(rt: Column, ownerId: Column, inst: Column,
+      key: Column): Seq[Column] = {
+    val ae = aeId(key, ownerId)
+    val rel = concat(lit("rel:"), key, lit("/"), ownerId)
+    Seq(atom(ae, Kind.AttributeEntity, rt, noEnd, noEnd, inst),
+      atom(rel, Kind.Relation, rt, ownerId, ae, inst))
+  }
+  def fieldAtoms(rt: String, ownerId: Column, inst: Column): Seq[Column] =
+    fieldAtoms(lit(rt), ownerId, inst, lit(rt))
+
+  /** vtype → the SQL type of its typed column `v_<vtype>`. */
+  private val sqlTypes = Map("str" -> "string", "long" -> "long",
+    "double" -> "double", "bool" -> "boolean", "ts" -> "timestamp")
+
+  /** One [[ValueRow]] cell at the int slice `slice`: `v` cast into the
+    * typed column of `vtype` (str/long/double/bool/ts), every other typed
+    * column null. */
+  def value(aeId: Column, slice: Column, vtype: String, v: Column): Column = {
+    require(sqlTypes.contains(vtype),
+      s"vtype must be one of str/long/double/bool/ts, got '$vtype'")
+    struct(Seq(aeId.as("ae_id"), slice.as("tx_slice"),
+      lit(vtype).as("vtype")) ++ FieldIndex.vcols.map { c =>
+      val t = sqlTypes(c.stripPrefix("v_"))
+      (if (c == s"v_$vtype") v.cast(t) else lit(null).cast(t)).as(c)
+    }: _*)
+  }
+
+  /** The vtype a source column of this Spark type encodes as. */
+  def vtypeOf(f: StructField): String = f.dataType.typeName match {
+    case "string" => "str"
+    case "long" | "integer" | "short" => "long"
+    case "double" | "float" => "double"
+    case "boolean" => "bool"
+    case "timestamp" | "timestamp_ntz" => "ts"
+    case other => throw new IllegalArgumentException(s"field ${f.name}: $other")
+  }
+
+  /** The rows of `cells` for every row of `df`, in one projection: a
+    * null cell (gated off with `when`) yields no row. All cells share one
+    * struct type. */
+  def rows(df: DataFrame, cells: Seq[Column]): DataFrame =
+    df.select((if (cells.size == 1) cells.head else explode(array(cells: _*)))
+        .as("__r"))
+      .filter(col("__r").isNotNull).select("__r.*")
 }
 
 object ValueRow {

@@ -451,14 +451,11 @@ object Transactor {
       trustedUniqueOwners: Boolean = false): (Graph, BulkDelta) = {
     val spark = g.spark
     val slice = g.maxSlice + 1
-    val vcols = FieldIndex.vcols
     require(fields.nonEmpty, "assignFieldsBulk: at least one field")
     require(fields.map(_.rt).distinct.size == fields.size,
       "assignFieldsBulk: duplicate field rts")
     require(fields.forall(_.rt != "owner_id"),
       "field rt cannot be named owner_id")
-    fields.foreach(f => require(vcols.contains(s"v_${f.vtype}"),
-      s"vtype must be one of str/long/double/bool/ts, got '${f.vtype}'"))
     // a NULL owner_id would concat into null ae/rel/atom ids — value rows
     // anchored to nothing, atoms invisible to every id-keyed read (the
     // silent-identity-corruption class GraphEncoder/IncrementalDedup
@@ -475,6 +472,15 @@ object Transactor {
         "assignFieldsBulk: null owner_id — every assignment row needs a " +
           "non-null owner atom id (filter or key first)")).cast("string"))
         .otherwise(col("owner_id"))
+    // value rows: one per assignment per field, this slice — by default a
+    // NULL skips that field for that owner (sparse multi-field update);
+    // assignNulls=true records it (explicit clear, the single-field
+    // wrapper's contract). Built (and vtype-checked) before the guard job.
+    def assigned(f: BulkField): org.apache.spark.sql.Column =
+      if (assignNulls) lit(true) else col(f.rt).isNotNull
+    val valuesDelta0 = Schema.rows(assignments, fields.map(f =>
+      when(assigned(f), Schema.value(Schema.aeId(f.rt, ownerIdChecked),
+        lit(slice), f.vtype, col(f.rt)))))
     // one row per owner per tx. `trustedUniqueOwners` skips the check's
     // count job for callers whose assignments come out of a groupBy on
     // owner_id (streaming ingest's winner reduction) — uniqueness holds
@@ -491,27 +497,6 @@ object Transactor {
           s"${counts.getLong(1)} distinct owners) — one row per owner per tx")
     }
 
-    def sqlType(vc: String): String = vc match {
-      case "v_str" => "string"; case "v_long" => "long"
-      case "v_double" => "double"; case "v_bool" => "boolean"
-      case "v_ts" => "timestamp"
-    }
-    // value rows: one per assignment per field, this slice — by default a
-    // NULL skips that field for that owner (sparse multi-field update);
-    // assignNulls=true records it (explicit clear, the single-field
-    // wrapper's contract)
-    def assigned(f: BulkField): org.apache.spark.sql.Column =
-      if (assignNulls) lit(true) else col(f.rt).isNotNull
-    val valuesDelta0 = fields.map { f =>
-      val targetCol = s"v_${f.vtype}"
-      assignments.filter(assigned(f)).select(
-        Seq(concat(lit(s"ae:${f.rt}/"), ownerIdChecked).as("ae_id"),
-          lit(slice).as("tx_slice"), lit(f.vtype).as("vtype")) ++
-        vcols.map(c =>
-          if (c == targetCol) col(f.rt).cast(sqlType(c)).as(c)
-          else lit(null).cast(sqlType(c)).as(c)): _*)
-    }.reduce(_ unionByName _)
-
     // Atoms this tx might need to open: field AE + field RELATION per
     // non-null assignment (checked INDEPENDENTLY, mirroring PutField: a
     // cascade-terminate of the owner closes the field relation but leaves
@@ -526,30 +511,12 @@ object Transactor {
     // atom table), then one anti-join of candidates vs that small
     // existing set. Scheme ids make id equality imply (kind, atype)
     // equality, so matching on atom_id alone is exact.
-    val candCols: Seq[org.apache.spark.sql.Column] = fields.flatMap { f =>
-      val ae = concat(lit(s"ae:${f.rt}/"), ownerIdChecked)
-      val rel = concat(lit(s"rel:${f.rt}/"), ownerIdChecked)
-      def gated(c: org.apache.spark.sql.Column) =
-        when(assigned(f), c)
-      Seq(
-        gated(struct(ae.as("atom_id"), lit(Kind.AttributeEntity).as("kind"),
-          lit(f.rt).as("atype"), lit(null).cast("string").as("src_id"),
-          lit(null).cast("string").as("dst_id"), ae.as("origin_uid"))),
-        gated(struct(rel.as("atom_id"), lit(Kind.Relation).as("kind"),
-          lit(f.rt).as("atype"), col("owner_id").as("src_id"),
-          ae.as("dst_id"), rel.as("origin_uid"))))
-    } ++ ensureOwnerType.map(et =>
-      struct(ownerIdChecked.as("atom_id"), lit(Kind.Entity).as("kind"),
-        lit(et).as("atype"), lit(null).cast("string").as("src_id"),
-        lit(null).cast("string").as("dst_id"),
-        ownerIdChecked.as("origin_uid")))
-    val cand = assignments
-      .select(explode(array(candCols: _*)).as("__c"))
-      .filter(col("__c").isNotNull)
-      .select(col("__c.atom_id"), col("__c.kind"), col("__c.atype"),
-        col("__c.src_id"), col("__c.dst_id"), col("__c.origin_uid"))
-    val prefixes = fields.flatMap(f =>
-      Seq(s"ae:${f.rt}/", s"rel:${f.rt}/")) ++
+    val cand = Schema.rows(assignments, fields.flatMap(f =>
+      Schema.fieldAtoms(f.rt, ownerIdChecked, lit(slice))
+        .map(when(assigned(f), _))) ++
+      ensureOwnerType.map(et => Schema.atom(ownerIdChecked, Kind.Entity,
+        lit(et), Schema.noEnd, Schema.noEnd, lit(slice))))
+    val prefixes = fields.flatMap(f => Schema.fieldPrefixes(f.rt)) ++
       ensureOwnerType.map(et => s"e:$et/")
     val aliveProbed = g.atoms.filter(col("term_slice").isNull &&
         prefixes.map(p => col("atom_id").startsWith(p)).reduce(_ || _))
@@ -559,9 +526,6 @@ object Transactor {
       .withColumnRenamed("atom_id", "__ex_id")
     val atomsDelta0 = cand
       .join(existing, col("atom_id") === col("__ex_id"), "left_anti")
-      .select(col("atom_id"), col("kind"), col("atype"), col("src_id"),
-        col("dst_id"), lit(slice).as("inst_slice"),
-        lit(null).cast("int").as("term_slice"), col("origin_uid"))
     // materialize BOTH delta frames in ONE job: packed as a tagged union
     // (their schemas differ, so each side rides in its own struct column),
     // checkpointed once, then split by tag — the split is a map over the

@@ -3,7 +3,7 @@ package graft.wrangling
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, MapType, StringType}
-import graft.core.{Graph, Kind, TxRow}
+import graft.core.{Graph, Kind, Schema, TxRow}
 
 /** Nested `infer_types` — the reference's rule-fixpoint type inference over
   * nested JSON objects (`python/zef/core/op_implementations/
@@ -339,13 +339,6 @@ object NestedInfer {
     Flattened(fixpoint(flat, rules), flat.triples)
   }
 
-  private def nullV = Seq(
-    lit(null).cast("string").as("v_str"),
-    lit(null).cast("long").as("v_long"),
-    lit(null).cast("double").as("v_double"),
-    lit(null).cast("boolean").as("v_bool"),
-    lit(null).cast("timestamp").as("v_ts"))
-
   /** Emit the typed object forest as a graph — the reference's
     * "obj → graph wishes" step (its infer_types output is transacted via
     * graph templates). Bulk path, mirroring [[graft.core.GraphEncoder]]:
@@ -358,51 +351,30 @@ object NestedInfer {
       : Graph = {
     val spark = flat.objects.sparkSession
     import spark.implicits._
-    val slice = lit(instSlice).cast("int")
-    val noTerm = lit(null).cast("int").as("term_slice")
-    val noEnd = Seq(lit(null).cast("string").as("src_id"),
-      lit(null).cast("string").as("dst_id"))
+    val slice = lit(instSlice)
 
-    val entities = flat.objects.select(
-      Seq(col("obj_id").as("atom_id"), lit(Kind.Entity).as("kind"),
-        col("obj_type").as("atype")) ++ noEnd ++
-        Seq(slice.as("inst_slice"), noTerm, col("obj_id").as("origin_uid")): _*)
+    val entities = Schema.rows(flat.objects, Seq(Schema.atom(col("obj_id"),
+      Kind.Entity, col("obj_type"), Schema.noEnd, Schema.noEnd, slice)))
 
-    val objTriples = flat.triples.filter(col("tgt_id").isNotNull)
-    val relAtoms = objTriples.select(
-      concat(lit("r:"), col("rel"), lit("/"), col("src_id"), lit(">"),
-        col("tgt_id")).as("atom_id"),
-      lit(Kind.Relation).as("kind"), col("rel").as("atype"),
-      col("src_id"), col("tgt_id").as("dst_id"),
-      slice.as("inst_slice"), noTerm,
-      concat(lit("r:"), col("rel"), lit("/"), col("src_id"), lit(">"),
-        col("tgt_id")).as("origin_uid"))
-
-    val scalars = flat.triples.filter(col("tgt_id").isNull)
-    // one AE per (object, rel, pos): array elements each get their own AE
+    // one projection over the triples: an object triple is a relation
+    // atom, a scalar triple an AE + field relation + value row.
+    // One AE per (object, rel, pos): array elements each get their own AE
     // (suffixed with the element index) so NO element value is dropped and
     // element order survives as part of the identity — the reference's
     // flatten_object list branch keeps one triple per element too
     // (data_wrangling.py:49-60); a one-AE-per-field collapse would silently
     // keep a single array element.
-    val posSuffix = when(col("pos").isNotNull,
-      concat(lit("["), col("pos"), lit("]"))).otherwise(lit(""))
-    val aeId = concat(lit("ae:"), col("rel"), posSuffix, lit("/"), col("src_id"))
-    val fieldRelId =
-      concat(lit("rel:"), col("rel"), posSuffix, lit("/"), col("src_id"))
-    val aeAtoms = scalars.select(
-      Seq(aeId.as("atom_id"), lit(Kind.AttributeEntity).as("kind"),
-        col("rel").as("atype")) ++ noEnd ++
-        Seq(slice.as("inst_slice"), noTerm, aeId.as("origin_uid")): _*)
-    val fieldRels = scalars.select(
-      fieldRelId.as("atom_id"), lit(Kind.Relation).as("kind"),
-      col("rel").as("atype"),
-      col("src_id"), aeId.as("dst_id"),
-      slice.as("inst_slice"), noTerm, fieldRelId.as("origin_uid"))
-
-    val values = scalars
-      .select(Seq(aeId.as("ae_id"), lit(instSlice).cast("int").as("tx_slice"),
-        lit("str").as("vtype"), col("tgt_value").as("v_str")) ++ nullV.tail: _*)
+    val isObj = col("tgt_id").isNotNull
+    val key = concat(col("rel"), when(col("pos").isNotNull,
+      concat(lit("["), col("pos"), lit("]"))).otherwise(lit("")))
+    val relAtom = Schema.atom(concat(lit("r:"), col("rel"), lit("/"),
+      col("src_id"), lit(">"), col("tgt_id")), Kind.Relation, col("rel"),
+      col("src_id"), col("tgt_id"), slice)
+    val tripleAtoms = Schema.rows(flat.triples, when(isObj, relAtom) +:
+      Schema.fieldAtoms(col("rel"), col("src_id"), slice, key)
+        .map(when(!isObj, _)))
+    val values = Schema.rows(flat.triples, Seq(when(!isObj, Schema.value(
+      Schema.aeId(key, col("src_id")), slice, "str", col("tgt_value")))))
 
     // the result graph's tables are scanned many times by any real
     // consumer (traversals join atoms against atoms against values):
@@ -421,8 +393,7 @@ object NestedInfer {
     // single-assignment flag below, so it is checked LOUDLY instead —
     // one cheap count-distinct over the (persisted) values table.
     val atoms = graft.core.TransientCaches.trackTable(
-      Seq(entities, relAtoms, aeAtoms, fieldRels)
-        .reduce(_ unionByName _).persist(lvl))
+      entities.unionByName(tripleAtoms).persist(lvl))
     val v = graft.core.TransientCaches.trackTable(values.persist(lvl))
     val c = v.agg(count(lit(1)), count_distinct(col("ae_id"))).collect()(0)
     require(c.getLong(0) == c.getLong(1),
